@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.config.MatchConfig
@@ -257,7 +258,7 @@ object Pipeline {
     spark.stop()
     // file first (survives stdout mangling), then the bare final line
     try Files.writeString(Paths.get("PIPELINE.json"), summary + "\n")
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
     println(summary)
   }
 }

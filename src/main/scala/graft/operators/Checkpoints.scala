@@ -199,8 +199,8 @@ object Checkpoints {
     * parent gammas) and term-frequency adjustment included. Each stage lands
     * in `root/<stage>` with a lineage sidecar and is skipped on re-run:
     *
-    *  - `gammas`: the narrow (ids + gammas [+ tf]) pair table — the pair
-    *    join and every comparator kernel run at most once per root.
+    *  - `gammas`: the narrow (ids + gammas) pair table — the pair join and
+    *    every comparator kernel run at most once per root.
     *  - `patterns_<stage>`: each EM stage's aggregated pattern counts
     *    (<= 4^k rows) — a resume re-runs the driver-side EM from these
     *    without rescanning the pair table.
@@ -384,6 +384,10 @@ object Checkpoints {
     * daily web-crawl increment needs at 10^12-document scale, where the
     * corpus pair space dwarfs the increment's.
     *
+    * The new pairs come from ONE pair join, increment x (corpus UNION
+    * increment), and are appended as new part files; the stored pairs are
+    * never read or rewritten.
+    *
     * Contract and guards:
     *  - `cfg` must be the EXACT configuration of the checkpointed run
     *    (validated against the stored fingerprint — config, blocking,
@@ -393,19 +397,12 @@ object Checkpoints {
     *  - increment ids must be disjoint from corpus ids (enforced).
     *
     * TF-adjusted configs (reference headline feature,
-    * `/root/reference/src/term_frequency_adjustment.jl:53-74`): TF
-    * denominators are corpus-wide value frequencies, so every stored pair's
-    * tf columns go stale the moment the corpus grows. The append REFRESHES
-    * them without re-comparing any pair: the per-variable frequency tables
-    * are recomputed over corpus UNION increment (one row-scale pass —
-    * [[TermFrequency.withTfColumns]]), keyed back to ids, and joined onto
-    * the combined pair table (row-scale build side, pair-scale probe); the
-    * gamma columns are carried unchanged and the refreshed table replaces
-    * the checkpoint via a staging-directory swap. Cost is one linear
-    * rewrite of the stored pairs — unavoidable, since their tf values
-    * genuinely change — never a re-run of the quadratic pair join or the
-    * comparator kernels. Non-TF configs keep the cheaper in-place parquet
-    * append (the corpus pairs are byte-stable there).
+    * `term_frequency_adjustment.jl:53-74`) take the same append: TF
+    * denominators are corpus-wide value frequencies, and the gamma table
+    * stores none. [[Linker.link]] joins each pair's current
+    * frequencies, computed over corpus UNION increment, on at scoring
+    * time. Roots written when the table still stored `tf_*` columns are
+    * read through an ids + gammas projection and append the same way.
     *
     * Crash safety: the stale downstream checkpoints AND the gamma sidecars
     * are deleted BEFORE the parquet append, and the sidecar is rewritten
@@ -461,16 +458,17 @@ object Checkpoints {
 
     def asA(df: DataFrame) = df.withColumnRenamed(idCol, cfg.idA)
     def asB(df: DataFrame) = df.withColumnRenamed(idCol, cfg.idB)
-    // increment x corpus: every cross pair exactly once, so NO ordering
-    // filter (the dedupe id_a < id_b convention would drop the pairs whose
-    // increment id is the larger); increment x increment: each unordered
-    // pair once via the standard filter. Together with the checkpointed
-    // corpus x corpus pairs this is exactly the unordered pair space of
+    // increment x (corpus UNION increment), one pair join. A row-scale
+    // origin flag on the B side lets the filter keep every cross pair
+    // (whichever id is larger) and each increment-internal pair once —
+    // with the stored corpus pairs, exactly the unordered pair space of
     // corpus UNION increment.
-    val gIC = Linker.narrowGammas(asA(increment), asB(corpus), cfg, blockCols,
-      maxBlockRows, fanoutPartitions)
-    val gII = Linker.narrowGammas(asA(increment), asB(increment), cfg, blockCols,
-      maxBlockRows, fanoutPartitions, pairFilter = Some(dedupePairFilter))
+    val origin = "__from_increment"
+    val sideB = corpus.withColumn(origin, lit(false))
+      .unionByName(increment.withColumn(origin, lit(true)))
+    val added = Linker.narrowGammas(asA(increment), asB(sideB), cfg, blockCols,
+      maxBlockRows, fanoutPartitions,
+      pairFilter = Some(!col(origin) || dedupePairFilter), carry = Seq(origin))
     // Downstream stages are stale the instant the append commits — drop them
     // FIRST. A crash between here and the sidecar rewrite below leaves gammas
     // incomplete and downstream absent (clean full recompute); deleting them
@@ -484,50 +482,7 @@ object Checkpoints {
     val full = corpus.unionByName(increment)
     val n = nC + nI
     val tAppend = System.nanoTime()
-    val tfSpecs = cfg.comparisons.allVariables.filter(_.tfAdjust)
-    if (tfSpecs.isEmpty) {
-      // corpus pairs are byte-stable — cheap in-place parquet append
-      gIC.unionByName(gII).write.mode("append").parquet(gdir)
-    } else {
-      // TF refresh (see the method doc): rebuild the per-variable frequency
-      // tables over corpus UNION increment and join the refreshed per-id tf
-      // values onto the COMBINED pair table — old pairs' stale tf and new
-      // pairs' wrong-denominator tf (narrowGammas computed them against the
-      // increment/corpus sides alone) are overwritten in one pass. Gamma
-      // columns ride through unchanged; no pair is re-compared. The result
-      // replaces the checkpoint via a staging swap because the stored pairs'
-      // tf bytes genuinely change.
-      def tfLookup(suffix: String, idName: String): DataFrame = {
-        // withTfColumns = the exact code path a from-scratch run uses to
-        // attach side tf columns, so the refreshed doubles are bit-identical
-        // to a full re-dedupe of corpus UNION increment
-        val withTf = TermFrequency.withTfColumns(full, tfSpecs, suffix)
-        val look = withTf.select(col(idCol).as(idName) +:
-          tfSpecs.map(s => col(s"tf_${s.varname}$suffix")): _*)
-        if (n <= TermFrequency.DefaultBroadcastMaxDistinct) broadcast(look)
-        else look
-      }
-      val old = spark.read.parquet(gdir)
-      val colOrder = old.columns.toSeq // keep the checkpoint schema stable
-      val tfCols = tfSpecs.flatMap(s =>
-        Seq(TermFrequency.tfColA(s.varname), TermFrequency.tfColB(s.varname)))
-      val refreshed = old.unionByName(gIC).unionByName(gII)
-        .drop(tfCols: _*)
-        .join(tfLookup("_a", "id_a"), Seq("id_a"), "left")
-        .join(tfLookup("_b", "id_b"), Seq("id_b"), "left")
-        .select(colOrder.map(col): _*)
-      val staging = s"${gdir}__tfswap"
-      deleteRecursive(staging)
-      refreshed.write.mode("overwrite").parquet(staging)
-      // swap: a crash anywhere in this window leaves the gamma stage
-      // incomplete (meta + link sidecar already deleted above) and at worst
-      // an orphaned staging dir — the next run recomputes from scratch and
-      // the next append clears the orphan
-      deleteRecursive(gdir)
-      val fs = new HPath(gdir).getFileSystem(hconf())
-      require(fs.rename(new HPath(staging), new HPath(gdir)),
-        s"failed to move refreshed gamma checkpoint $staging -> $gdir")
-    }
+    added.write.mode("append").parquet(gdir)
     // link sidecar BEFORE the completeness flip: a crash between the two
     // must leave the stage incomplete (clean recompute), never complete
     // without its fingerprint/dims drift guard

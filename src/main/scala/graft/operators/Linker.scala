@@ -109,6 +109,8 @@ object Linker {
     * is row-scale). Effective parallelism is bounded by distinct join keys,
     * which is what `maxBlockRows` salting multiplies. Opt-in because at
     * true input scale the join input already spans many map tasks.
+    * `tfAdjust` specs get side `tf_<var>_a/_b` columns; `carry` columns of
+    * either side ride the join unsuffixed, for a pair filter to read.
     */
   def buildPairs(
       dfA: DataFrame,
@@ -119,7 +121,8 @@ object Linker {
       maxBlockRows: Option[Long] = None,
       fanoutPartitions: Option[Int] = None,
       observeA: Option[org.apache.spark.sql.Observation] = None,
-      observeB: Option[org.apache.spark.sql.Observation] = None): DataFrame = {
+      observeB: Option[org.apache.spark.sql.Observation] = None,
+      carry: Seq[String] = Nil): DataFrame = {
     def side(df: DataFrame, id: String, suffix: String): DataFrame = {
       val varCols = specs.map(_.varname).distinct
       val tf = TermFrequency.withTfColumns(df, specs, suffix)
@@ -127,6 +130,7 @@ object Linker {
         col(id).as(s"id$suffix") +:
           (varCols.map(v => col(v).as(s"$v$suffix")) ++
             specs.filter(_.tfAdjust).map(s => col(s"tf_${s.varname}$suffix")) ++
+            carry.filter(df.columns.contains).map(col) ++
             blockCols.map(col))
       tf.select(keep: _*)
     }
@@ -212,12 +216,13 @@ object Linker {
       .digest(repr.getBytes("UTF-8")).map("%02x".format(_)).mkString
   }
 
-  /** The narrow (ids + gammas [+ tf]) pair table for one A x B pair space —
+  /** The narrow (ids + gammas) pair table for one A x B pair space —
     * exactly the content of the gamma checkpoint: blocked pair join, gamma
     * columns for every leaf variable (codegen), original compared columns
-    * dropped. [[link]] runs EM over this; the incremental-append path
+    * dropped, no TF values ([[link]] joins those on at scoring time).
+    * [[link]] runs EM over this; the incremental-append path
     * ([[Checkpoints.appendDedupeIncrement]]) computes it for the
-    * increment-only pair spaces and unions it into an existing checkpoint.
+    * increment's pair space and appends it to an existing checkpoint.
     */
   def narrowGammas(
       dfA: DataFrame,
@@ -229,10 +234,12 @@ object Linker {
       pairFilter: Option[Column] = None,
       autoDistinctRewrite: Boolean = false,
       observeA: Option[org.apache.spark.sql.Observation] = None,
-      observeB: Option[org.apache.spark.sql.Observation] = None): DataFrame = {
+      observeB: Option[org.apache.spark.sql.Observation] = None,
+      carry: Seq[String] = Nil): DataFrame = {
     val allSpecs = cfg.comparisons.allVariables
-    var ps = buildPairs(dfA, dfB, cfg, allSpecs, blockCols, maxBlockRows,
-      fanoutPartitions, observeA, observeB)
+    // no side TF columns: the narrow table does not keep them
+    var ps = buildPairs(dfA, dfB, cfg, allSpecs.map(_.copy(tfAdjust = false)),
+      blockCols, maxBlockRows, fanoutPartitions, observeA, observeB, carry)
     pairFilter.foreach(f => ps = ps.filter(f))
     // gamma columns for every leaf variable (one codegen'd projection;
     // the distinct-value rewrite is applied per variable where it pays)
@@ -248,12 +255,12 @@ object Linker {
     // comparisons run exactly once, and the EM/threshold passes re-read a
     // narrow columnar table (bytes per pair) instead of re-running the join
     // + kernels.
-    val keep = Seq("id_a", "id_b") ++
-      allSpecs.map(s => Gamma.gammaColName(s.varname)) ++
-      allSpecs.filter(_.tfAdjust).flatMap(s =>
-        Seq(TermFrequency.tfColA(s.varname), TermFrequency.tfColB(s.varname)))
-    ps.select(keep.map(col): _*)
+    ps.select(narrowCols(cfg).map(col): _*)
   }
+
+  /** The gamma checkpoint's columns: ids + one gamma per leaf variable. */
+  private[operators] def narrowCols(cfg: MatchConfig): Seq[String] =
+    Seq("id_a", "id_b") ++ cfg.comparisons.allVariables.map(s => Gamma.gammaColName(s.varname))
 
   def link(
       dfA: DataFrame,
@@ -291,9 +298,9 @@ object Linker {
 
     // RESUME: a complete narrow-gamma checkpoint at `persistPath` (lineage
     // sidecar present — see Checkpoints) short-circuits the pair join and
-    // every comparator kernel; the narrow (ids + gammas [+ tf]) table is
-    // re-read instead. The EM/threshold stages below are identical either
-    // way — they only ever see the narrow table.
+    // every comparator kernel; the narrow (ids + gammas) table is re-read
+    // instead — projected, as older roots also store tf_* columns. The
+    // EM/threshold stages below only ever see the narrow table.
     val resumedPath = if (persist) persistPath.filter(Checkpoints.isCompleteAt) else None
     val fp = checkpointFingerprint(cfg, blockCols, maxBlockRows, pairFilter)
     // link sidecar of a resumed checkpoint: config fingerprint (validated)
@@ -341,7 +348,7 @@ object Linker {
 
     var cachedBase: Option[DataFrame] = None
     var pairs: DataFrame = resumedPath match {
-      case Some(done) => spark.read.parquet(done)
+      case Some(done) => spark.read.parquet(done).select(narrowCols(cfg).map(col): _*)
       case None =>
         val narrow = narrowGammas(dfA, dfB, cfg, blockCols, maxBlockRows,
           fanoutPartitions, pairFilter, autoDistinctRewrite,
@@ -415,9 +422,14 @@ object Linker {
     val stats = Patterns.statsDf(spark, emFinal)
     var annotated = Patterns.attach(pairs, stats, rootVars)
 
-    // TF adjustment on the final stage (reference T3-T5)
-    if (allSpecs.exists(_.tfAdjust))
-      annotated = TermFrequency.adjust(annotated, allSpecs, emFinal, root.em.thresholdMatch)
+    // TF adjustment on the final stage (reference T3-T5), with TF values
+    // joined from the CURRENT inputs: frequencies are corpus-wide, so stored
+    // ones would go stale as the corpus grows; ids and gammas never do
+    if (allSpecs.exists(_.tfAdjust)) {
+      val withTf = TermFrequency.joinById(TermFrequency.joinById(
+        annotated, dfA, cfg.idA, allSpecs, "_a"), dfB, cfg.idB, allSpecs, "_b")
+      annotated = TermFrequency.adjust(withTf, allSpecs, emFinal, root.em.thresholdMatch)
+    }
 
     LinkResult(cfg, emFinal, childResults.toSeq, stats, annotated, cachedBase)
   }

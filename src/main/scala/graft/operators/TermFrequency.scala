@@ -56,16 +56,35 @@ object TermFrequency {
     * distinct-value rewrite (`Gamma.distinctRatio`).
     */
   def withTfColumns(df: DataFrame, specs: Seq[VariableSpec], suffix: String,
-      broadcastMaxDistinct: Long = DefaultBroadcastMaxDistinct): DataFrame = {
+      broadcastMaxDistinct: Long = DefaultBroadcastMaxDistinct): DataFrame =
+    tfColumnsAndRows(df, specs.filter(_.tfAdjust), suffix, broadcastMaxDistinct)._1
+
+  /** Left-joins one link side's per-id TF values (`tf_<var><suffix>`, as
+    * [[withTfColumns]] computes them over `side`) onto `pairs` by
+    * `id<suffix>`: the scoring-time TF join. The lookup is row-scale and
+    * broadcast while `side` has at most [[DefaultBroadcastMaxDistinct]]
+    * rows; above that the join shuffles `pairs`. Side ids must be unique.
+    */
+  def joinById(pairs: DataFrame, side: DataFrame, idCol: String,
+      specs: Seq[VariableSpec], suffix: String): DataFrame = {
     val tfSpecs = specs.filter(_.tfAdjust)
-    if (tfSpecs.isEmpty) return df
+    val (withTf, rows) = tfColumnsAndRows(side, tfSpecs, suffix, DefaultBroadcastMaxDistinct)
+    val look = withTf.select(col(idCol).as("__tf_id") +:
+      tfSpecs.map(s => col(s"tf_${s.varname}$suffix")): _*)
+    pairs.join(if (rows <= DefaultBroadcastMaxDistinct) broadcast(look) else look,
+      col(s"id$suffix") === col("__tf_id"), "left").drop("__tf_id")
+  }
+
+  private def tfColumnsAndRows(df: DataFrame, tfSpecs: Seq[VariableSpec], suffix: String,
+      broadcastMaxDistinct: Long): (DataFrame, Long) = {
+    if (tfSpecs.isEmpty) return (df, -1L)
     val statsRow = df.agg(count(lit(1)).as("__n"),
       tfSpecs.map(s => approx_count_distinct(col(s.varname)).as(s"__d_${s.varname}")): _*)
       .head()
     val total = statsRow.getLong(0)
     val distinctOf = tfSpecs.zipWithIndex
       .map { case (s, i) => s.varname -> statsRow.getLong(i + 1) }.toMap
-    tfSpecs.foldLeft(df) { (acc, s) =>
+    val out = tfSpecs.foldLeft(df) { (acc, s) =>
       val ft0 = freqTable(df, s.varname, s.tfMinimumUValue, Some(total))
         .withColumnRenamed(s.varname, s"__tfv")
         .withColumnRenamed(s"tf_${s.varname}", s"tf_${s.varname}$suffix")
@@ -76,6 +95,7 @@ object TermFrequency {
         .withColumn(s"tf_${s.varname}$suffix",
           coalesce(col(s"tf_${s.varname}$suffix"), lit(1.0)))
     }
+    (out, total)
   }
 
   /** Per-pair TF denominator for one variable (reference

@@ -341,10 +341,10 @@ class CheckpointsSpec extends SparkSpec {
   }
 
   test("TF-adjusted incremental append == from-scratch dedupe of the union") {
-    // TF denominators are corpus-wide value frequencies, so the append must
-    // REFRESH every stored pair's tf columns against corpus UNION increment
-    // (one row-scale lookup join — no pair re-compared) for the final_zeta
-    // scores to match a from-scratch run exactly
+    // TF denominators are corpus-wide value frequencies; the gamma table
+    // stores none, and scoring joins each pair's frequencies over corpus
+    // UNION increment, so the final_zeta scores match a from-scratch run
+    // exactly
     val rootFull = tmpRoot()
     val rootInc = tmpRoot()
     val pages = webPages(400).select("page_id", "title", "n_tokens", "block")
@@ -362,9 +362,8 @@ class CheckpointsSpec extends SparkSpec {
         comparisonSpace = Some(Checkpoints.dedupeComparisonSpace))
 
     dedupe(pages, rootFull).count()
-    // two-day chain: day-1 corpus, then TWO successive appends — the refresh
-    // must compose (day-3 frequencies are over the whole grown corpus, and
-    // day-2's refreshed values are refreshed AGAIN)
+    // two-day chain: day-1 corpus, then TWO successive appends — day-3
+    // frequencies are over the whole grown corpus
     val corpus = pages.filter(pmod(col("page_id"), lit(4)).isin(1, 2))
     val inc2 = pages.filter(pmod(col("page_id"), lit(4)) === 3)
     val inc3 = pages.filter(pmod(col("page_id"), lit(4)) === 0)
@@ -390,24 +389,138 @@ class CheckpointsSpec extends SparkSpec {
         .groupBy(_.getAs[Long]("component"))
         .map(_._2.map(_.getAs[Long]("node")).toSet).toSet
     assert(grouping(rootInc) == grouping(rootFull))
-    // the refreshed gamma checkpoint's tf columns equal the full run's for
+    // the gamma checkpoint holds ids + gammas only, and the per-pair TF
+    // table scored over the incremented root equals the full run's for
     // every stored pair (not just the matched ones)
+    assert(spark.read.parquet(s"$rootInc/gammas").columns.toSeq ==
+      Seq("id_a", "id_b", "gamma_title", "gamma_n_tokens"))
     def tfByPair(root: String) =
-      spark.read.parquet(s"$root/gammas")
+      Linker.link(asA(pages), asB(pages), cfgTf, Seq("block"),
+        persistPath = Some(s"$root/gammas"),
+        pairFilter = Some(Checkpoints.dedupePairFilter),
+        comparisonSpace = Some(Checkpoints.dedupeComparisonSpace)).tfAdjTable
         .select(least(col("id_a"), col("id_b")), greatest(col("id_a"), col("id_b")),
-          col("tf_title_a"), col("tf_title_b"))
+          col("pattern_id"), col("tf_title_a"), col("tf_title_b"))
         .collect().map(r => (r.getLong(0), r.getLong(1)) ->
-          (r.getDouble(2), r.getDouble(3))).toMap
+          (r.getInt(2), (r.getDouble(3), r.getDouble(4)))).toMap
     val tfInc = tfByPair(rootInc)
     val tfFull = tfByPair(rootFull)
     assert(tfInc.keySet == tfFull.keySet)
-    assert(tfInc.forall { case (k, v) =>
+    assert(tfInc.forall { case (k, (p, v)) =>
       // unordered key: the a/b tf values may swap sides with the id order
-      val w = tfFull(k); v == w || v == w.swap
+      val (q, w) = tfFull(k); p == q && (v == w || v == w.swap)
     })
-    // and the lineage sidecar covers the refreshed table
+    // and the lineage sidecar covers the appended table
     val info = Checkpoints.readInfo(rootInc, "gammas").get
     assert(info.perPartitionRows.sum == info.rows && info.rows == tfInc.size)
+  }
+
+  private val cfgTitleTf = MatchConfig(
+    idA = "__ida", idB = "__idb",
+    comparisons = ComparisonGroup("web", Seq(
+      VariableSpec("title", "jarowinkler", cutA = 0.92, cutB = 0.88, tfAdjust = true),
+      VariableSpec("n_tokens", "numeric", cutA = 1, cutB = 3))))
+
+  private def dedupeTf(df: org.apache.spark.sql.DataFrame, root: String,
+      maxBlockRows: Option[Long] = None) =
+    Checkpoints.linkAndClusterResumable(df.withColumnRenamed("page_id", "__ida"),
+      df.withColumnRenamed("page_id", "__idb"), cfgTitleTf, Seq("block"), root,
+      maxBlockRows = maxBlockRows,
+      pairFilter = Some(Checkpoints.dedupePairFilter),
+      comparisonSpace = Some(Checkpoints.dedupeComparisonSpace))
+
+  private def unorderedMatchSet(root: String) =
+    spark.read.parquet(s"$root/matches")
+      .select(least(col("id_a"), col("id_b")), greatest(col("id_a"), col("id_b")),
+        col("zeta_j"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+
+  test("a gamma root that stores tf_* columns resumes and takes an increment") {
+    // roots written while the gamma table still stored per-pair TF columns
+    // must score exactly as before: resume and append read the stored pairs
+    // through an ids + gammas projection (without it, the scoring lookup's
+    // tf_title_a collides with the stored one)
+    val rootFull = tmpRoot()
+    val rootOld = tmpRoot()
+    val pages = webPages(300).select("page_id", "title", "n_tokens", "block")
+    val corpus = pages.filter(pmod(col("page_id"), lit(4)) =!= 0)
+    val inc = pages.filter(pmod(col("page_id"), lit(4)) === 0)
+    dedupeTf(pages, rootFull).count()
+    dedupeTf(corpus, rootOld).count()
+    val dayOne = unorderedMatchSet(rootOld)
+    assert(dayOne.nonEmpty)
+
+    // rewrite the gamma stage in the old layout, sidecars kept
+    val gdir = Paths.get(s"$rootOld/gammas")
+    val tf = TermFrequency.withTfColumns(corpus, cfgTitleTf.comparisons.allVariables, "")
+    val oldLayout = spark.read.parquet(gdir.toString)
+      .join(tf.select(col("page_id").as("id_a"), col("tf_title").as("tf_title_a")), Seq("id_a"))
+      .join(tf.select(col("page_id").as("id_b"), col("tf_title").as("tf_title_b")), Seq("id_b"))
+    val staging = Paths.get(tmpRoot(), "gammas")
+    oldLayout.write.parquet(staging.toString)
+    Files.list(gdir).filter(_.getFileName.toString.startsWith("_graft"))
+      .forEach(f => Files.copy(f, staging.resolve(f.getFileName)))
+    rmStageAt(rootOld, "gammas")
+    Files.move(staging, gdir)
+    assert(spark.read.parquet(gdir.toString).columns.contains("tf_title_a"))
+
+    // resume: matches are rescored from the old-layout table
+    Seq("matches", "clusters").foreach(rmStageAt(rootOld, _))
+    dedupeTf(corpus, rootOld).count()
+    assert(unorderedMatchSet(rootOld) == dayOne)
+    // append: identical to the from-scratch dedupe of the union
+    Checkpoints.appendDedupeIncrement(corpus, inc, "page_id", cfgTitleTf,
+      Seq("block"), rootOld).count()
+    assert(unorderedMatchSet(rootOld) == unorderedMatchSet(rootFull))
+  }
+
+  test("increment pair space: ids below and above the corpus, each pair once, day-1 files kept") {
+    val root = tmpRoot()
+    val pages = webPages(400).select("page_id", "title", "n_tokens", "block")
+    val ids = pages.select("page_id").collect().map(_.getLong(0)).sorted
+    val (lo, hi) = (ids(1), ids(ids.length - 2))
+    // every 4th page plus the two lowest and two highest ids: increment
+    // ids sit below, between and above the corpus ids
+    val isInc = pmod(col("page_id"), lit(4)) === 0 ||
+      col("page_id") <= lo || col("page_id") >= hi
+    val corpus = pages.filter(!isInc)
+    val inc = pages.filter(isInc)
+    val span = (d: org.apache.spark.sql.DataFrame) =>
+      d.agg(min("page_id"), max("page_id")).head()
+    assert(span(inc).getLong(0) < span(corpus).getLong(0))
+    assert(span(inc).getLong(1) > span(corpus).getLong(1))
+
+    // a salting cap below the largest blocks exercises the salted fused join
+    dedupeTf(corpus, root, maxBlockRows = Some(20L)).count()
+    val gdir = Paths.get(s"$root/gammas")
+    def partFiles: Map[String, Long] = {
+      val s = Files.list(gdir)
+      try s.filter(_.getFileName.toString.startsWith("part-")).toArray
+        .map(_.asInstanceOf[java.nio.file.Path])
+        .map(f => f.getFileName.toString -> Files.size(f)).toMap
+      finally s.close()
+    }
+    val filesBefore = partFiles
+    val rowsBefore = Checkpoints.readInfo(root, "gammas").get.rows
+    Checkpoints.appendDedupeIncrement(corpus, inc, "page_id", cfgTitleTf,
+      Seq("block"), root, maxBlockRows = Some(20L)).count()
+
+    // appended rows == Σ per block n_I·n_C + n_I(n_I−1)/2
+    val perBlock = inc.groupBy("block").agg(count(lit(1)).as("ni"))
+      .join(corpus.groupBy("block").agg(count(lit(1)).as("nc")), Seq("block"), "left")
+      .agg(sum(col("ni") * coalesce(col("nc"), lit(0L)) + col("ni") * (col("ni") - 1) / 2)
+        .cast("long")).head().getLong(0)
+    assert(perBlock > 0)
+    assert(Checkpoints.readInfo(root, "gammas").get.rows - rowsBefore == perBlock)
+    // no self pair, no unordered pair twice
+    val g = spark.read.parquet(gdir.toString)
+    assert(g.filter(col("id_a") === col("id_b")).count() == 0)
+    val unordered = g.select(least(col("id_a"), col("id_b")), greatest(col("id_a"), col("id_b")))
+    assert(unordered.distinct().count() == unordered.count())
+    // append only: every day-1 part file keeps its name and size
+    val filesAfter = partFiles
+    assert(filesBefore.nonEmpty && filesAfter.size > filesBefore.size)
+    assert(filesBefore.forall { case (n, size) => filesAfter.get(n).contains(size) })
   }
 
   test("cache-mode resume fails fast when inputs drifted and stages must recompute") {

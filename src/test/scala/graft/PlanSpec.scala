@@ -277,6 +277,65 @@ class PlanSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
+  test("TF dedupe: day-1 pair join has no frequency aggregate; increment write is one join, no gamma scan") {
+    import org.apache.spark.sql.SaveMode
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, LogicalPlan}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+      InsertIntoHadoopFsRelationCommand, LogicalRelation}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val root = java.nio.file.Files.createTempDirectory("graft-plan").toString
+    val gdir = new org.apache.hadoop.fs.Path(s"$root/gammas")
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[InsertIntoHadoopFsRelationCommand]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        qe.analyzed.foreach {
+          case w: InsertIntoHadoopFsRelationCommand if w.outputPath.getName == "gammas" &&
+              w.outputPath.toString.contains(root) => writes.add(w)
+          case _ =>
+        }
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    val pages = spark.range(80).select(col("id").as("page_id"),
+      concat(lit("t"), (col("id") % 7).cast("string")).as("title"),
+      (col("id") % 3).cast("string").as("block"))
+    val cfg = MatchConfig("__ida", "__idb", comparisons = ComparisonGroup("g",
+      Seq(VariableSpec("title", "exact", tfAdjust = true))))
+    val corpus = pages.filter(col("page_id") % 5 =!= 0)
+    val inc = pages.filter(col("page_id") % 5 === 0)
+    def writeOf(mode: SaveMode): LogicalPlan = {
+      val deadline = System.nanoTime() + 30e9.toLong
+      // listener events arrive asynchronously
+      while (!writes.toArray.exists(_.asInstanceOf[InsertIntoHadoopFsRelationCommand].mode == mode) &&
+          System.nanoTime() < deadline) Thread.sleep(50)
+      writes.toArray.map(_.asInstanceOf[InsertIntoHadoopFsRelationCommand])
+        .find(_.mode == mode).getOrElse(fail(s"no $mode write to $gdir")).query
+    }
+    spark.listenerManager.register(listener)
+    try {
+      Checkpoints.linkAndClusterResumable(corpus.withColumnRenamed("page_id", "__ida"),
+        corpus.withColumnRenamed("page_id", "__idb"), cfg, Seq("block"), root,
+        pairFilter = Some(Checkpoints.dedupePairFilter),
+        comparisonSpace = Some(Checkpoints.dedupeComparisonSpace)).count()
+      Checkpoints.appendDedupeIncrement(corpus, inc, "page_id", cfg, Seq("block"), root).count()
+
+      val day1 = writeOf(SaveMode.Overwrite)
+      val tfAggs = day1.collect {
+        case a: Aggregate if a.output.exists(_.name.startsWith("tf_")) => a
+      }
+      assert(tfAggs.isEmpty, s"frequency aggregate in the day-1 pair join:\n$day1")
+      assert(day1.collect { case j: Join => j }.size == 1, day1.toString)
+
+      val increment = writeOf(SaveMode.Append)
+      assert(increment.collect { case j: Join => j }.size == 1,
+        s"increment write plan is not one pair join:\n$increment")
+      val gammaScans = increment.collect { case r: LogicalRelation => r.relation }.collect {
+        case h: HadoopFsRelation if h.location.rootPaths.exists(_.toString.contains(root)) => h
+      }
+      assert(gammaScans.isEmpty, s"increment write scans the stored gammas:\n$increment")
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   test("distinct-value rewrite broadcasts the scored distinct table") {
     import spark.implicits._
     val pairs = Seq(("a", "MARTHA", "MARHTA"), ("b", "MARTHA", "MARHTA"))
