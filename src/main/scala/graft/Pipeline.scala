@@ -17,9 +17,18 @@ import graft.operators.Checkpoints
   *   --config fastlink_config.json \
   *   --block host,lang \
   *   --checkpoint s3://bucket/ckpt/run1 \
-  *   [--out /data/clusters.parquet] [--max-block-rows 1000] [--fanout 256] \
+  *   [--out /data/clusters.parquet] [--max-block-rows 1000] [--fanout <max-partitions>] \
   *   [--increment /data/pages_day2.parquet] [--gamma-checkpoint parquet|cache]
   * }}}
+  *
+  * `--fanout` caps the pair join's partition count. The count itself comes
+  * from the join's exact output P (Σ n_a·n_b over the blocks, from the
+  * block-count query the salting runs anyway): one task per
+  * [[graft.operators.Linker.PairsPerTask]] pairs, at least two per core —
+  * see [[graft.operators.Linker.pairJoinPartitions]]. Without `--fanout`
+  * the join inputs are not repartitioned. The `gammas` entry of the summary
+  * reports the last gamma write's P and chosen count as
+  * `"pair_join":{"pairs_predicted":P,"partitions":n}`.
   *
   * `--gamma-checkpoint` picks the pair-scale gamma materialization: `cache`
   * (the DEFAULT for non-increment runs) keeps it in an in-run cache
@@ -215,11 +224,16 @@ object Pipeline {
       Checkpoints.readInfo(args.checkpointRoot, s).map(s -> _)).toMap
     val resumed = stages.filter(s =>
       infosAfter.get(s).exists(i => sidecarsBefore.get(s).contains(i.writtenAtMs)))
+    // the gamma entry also carries the pair join's sizing: exact predicted
+    // pairs and the fan-out it chose (for an increment run, the append's)
+    val pairJoin = Checkpoints.readPairSizing(args.checkpointRoot)
+      .map(z => s""","pair_join":{${z.json}}""").getOrElse("")
     val stageJson = stages.flatMap { s =>
       infosAfter.get(s).map { i =>
         s""""$s":{"rows":${i.rows},"partitions":${i.partitions},""" +
           s""""sec":${Fmt.num(i.secs, 2)},""" +
-          s""""resumed":${resumed.contains(s)},"written_at_ms":${i.writtenAtMs}}"""
+          s""""resumed":${resumed.contains(s)},"written_at_ms":${i.writtenAtMs}""" +
+          (if (s == "gammas") pairJoin else "") + "}"
       }
     }.mkString("{", ",", "}")
     val sec = (System.nanoTime() - t0) / 1e9

@@ -75,11 +75,6 @@ object Checkpoints {
   def isComplete(root: String, stage: String): Boolean =
     isCompleteAt(dir(root, stage))
 
-  /** Returns the checkpointed DataFrame at `path` if complete, else computes
-    * `df`, writes it + metadata, and returns the re-read (lineage-truncated)
-    * DataFrame. The stage name recorded in the sidecar is the last path
-    * segment.
-    */
   /** Recomputes the per-partition lineage counters from the parquet files at
     * `path` and writes the stage sidecar — the step that flips a checkpoint
     * to complete. Counters come from the parquet FOOTERS (one row-group
@@ -144,6 +139,11 @@ object Checkpoints {
   private def trace(msg: String): Unit = if (traceEnabled)
     System.err.println(f"[pipeline-trace] ${(System.nanoTime() - traceT0) / 1e9}%8.3fs  $msg")
 
+  /** Returns the checkpointed DataFrame at `path` if complete, else computes
+    * `df`, writes it + metadata, and returns the re-read (lineage-truncated)
+    * DataFrame, read with the written schema. The stage name recorded in the
+    * sidecar is the last path segment.
+    */
   def materializeAt(spark: SparkSession, path: String,
       beforeComplete: () => Unit = () => ())(df: => DataFrame): DataFrame = {
     if (!isCompleteAt(path)) {
@@ -162,12 +162,30 @@ object Checkpoints {
       beforeComplete()
       writeMetaFor(spark, path, secs = computed)
       trace(f"stage end:   $path ($computed%.2fs + meta)")
-    }
-    spark.read.parquet(path)
+      // read back with the schema just written: Parquet schema inference
+      // would launch a Spark job of its own
+      spark.read.schema(d.schema).parquet(path)
+    } else spark.read.parquet(path)
   }
 
   def materialize(spark: SparkSession, root: String, stage: String)(df: => DataFrame): DataFrame =
     materializeAt(spark, dir(root, stage))(df)
+
+  /** The [[Linker.PairSizing]] of the pair join behind the last write to
+    * the `gammas` stage at `root` (day 1 or the latest increment), from its
+    * link sidecar; `None` when the stage is incomplete or its write ran no
+    * block-count query.
+    */
+  def readPairSizing(root: String): Option[Linker.PairSizing] = {
+    val path = Linker.linkMetaAt(dir(root, "gammas"))
+    if (!isComplete(root, "gammas") || !fileExists(path)) None
+    else {
+      val json = readFile(path)
+      def grab(k: String) = s""""$k":([0-9]+)""".r.findFirstMatchIn(json).map(_.group(1))
+      grab("pairs_predicted").map(v =>
+        Linker.PairSizing(BigInt(v), grab("partitions").map(_.toInt)))
+    }
+  }
 
   def readInfo(root: String, stage: String): Option[StageInfo] =
     if (!isComplete(root, stage)) None
@@ -466,7 +484,7 @@ object Checkpoints {
     val origin = "__from_increment"
     val sideB = corpus.withColumn(origin, lit(false))
       .unionByName(increment.withColumn(origin, lit(true)))
-    val added = Linker.narrowGammas(asA(increment), asB(sideB), cfg, blockCols,
+    val (added, sizing) = Linker.narrowGammas(asA(increment), asB(sideB), cfg, blockCols,
       maxBlockRows, fanoutPartitions,
       pairFilter = Some(!col(origin) || dedupePairFilter), carry = Seq(origin))
     // Downstream stages are stale the instant the append commits — drop them
@@ -487,7 +505,7 @@ object Checkpoints {
     // must leave the stage incomplete (clean recompute), never complete
     // without its fingerprint/dims drift guard
     Checkpoints.writeFile(linkMeta,
-      s"""{"fingerprint":"$fp","dims_a":${unorderedPairCount(n)},"dims_b":1}""")
+      Linker.linkMetaJson(fp, (unorderedPairCount(n), BigInt(1)), sizing))
     writeMetaFor(spark, gdir, secs = (System.nanoTime() - tAppend) / 1e9)
 
     // recompute the downstream stages over the combined pair table (pattern

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Transitive closure of above-threshold pairs into entity clusters via the
   * alternating large-star / small-star algorithm (Kiveris et al.,
@@ -116,15 +117,27 @@ object ConnectedComponents {
   private def runInternal(
       edges: DataFrame, maxIter: Int, reliable: Boolean,
       localMaxEdges: Long): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-
     def checkpoint(df: DataFrame): DataFrame = {
       val out = if (reliable) df.checkpoint() else df.localCheckpoint()
       out
     }
 
     val cap = math.min(localMaxEdges, Int.MaxValue.toLong - 1).toInt
+    // The edge source is persisted across the probe and the fall-through:
+    // the probe runs the whole upstream lineage (every map stage feeding
+    // the first partition), and an over-cap graph would otherwise run it
+    // again for the distinct below. Every path leaves with driver arrays or
+    // an eagerly checkpointed edge table, so the source is released on exit.
+    val source = edges.toDF("u", "v").persist(StorageLevel.MEMORY_AND_DISK)
+    try runFrom(source, maxIter, cap, localMaxEdges, checkpoint)
+    finally source.unpersist()
+  }
+
+  private def runFrom(
+      source: DataFrame, maxIter: Int, cap: Int, localMaxEdges: Long,
+      checkpoint: DataFrame => DataFrame): DataFrame = {
+    val spark = source.sparkSession
+    import spark.implicits._
     // RAW fast path: when even the un-deduplicated edge list fits the local
     // cutoff, take it in ONE bounded pass — union-find is insensitive to
     // duplicate edges and orientation, so the normalize/distinct shuffle,
@@ -136,7 +149,7 @@ object ConnectedComponents {
     // path after distinct shrinks the graph. Self-loops are dropped in the
     // filter — same node universe as the distinct path. Driver footprint is
     // the transient boxed batch (bounded by the cap) + two long arrays.
-    val raw = edges.toDF("u", "v").filter($"u" =!= $"v")
+    val raw = source.filter($"u" =!= $"v")
     val taken = raw.limit(cap + 1).collect()
     if (taken.length <= cap) {
       val n = taken.length
@@ -151,9 +164,7 @@ object ConnectedComponents {
 
     // normalize: undirected, no self-loops, as (u, v)
     var e = checkpoint(
-      edges.toDF("u", "v")
-        .filter($"u" =!= $"v")
-        .select(least($"u", $"v").as("u"), greatest($"u", $"v").as("v"))
+      raw.select(least($"u", $"v").as("u"), greatest($"u", $"v").as("v"))
         .distinct())
 
     val nEdges = e.count()

@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.ByteType
+import org.apache.spark.sql.types.{ByteType, DecimalType, IntegerType, StructField, StructType}
 import graft.config.{ComparisonGroup, MatchConfig, VariableSpec}
 
 /** End-to-end probabilistic linkage orchestration — the Spark-native
@@ -79,6 +79,65 @@ object Linker {
     }
   }
 
+  /** Target join-output rows per pair-join task: the unit of the fan-out
+    * rule in [[pairJoinPartitions]].
+    */
+  val PairsPerTask: Long = 1000000L
+
+  /** The exact output size of one pair join and the partition count its
+    * inputs were repartitioned to (`None`: no fan-out was asked for).
+    */
+  final case class PairSizing(pairs: BigInt, partitions: Option[Int]) {
+    /** The fields as they land in the gamma stage's link sidecar. */
+    private[graft] def json: String =
+      s""""pairs_predicted":$pairs""" + partitions.fold("")(n => s""","partitions":$n""")
+  }
+
+  /** The pair-join fan-out: one task per [[PairsPerTask]] output pairs, at
+    * least two tasks per core, at most `ceiling` (the caller's
+    * `fanoutPartitions` / the Pipeline's `--fanout`).
+    */
+  def pairJoinPartitions(pairs: BigInt, parallelism: Int, ceiling: Int): Int = {
+    val byPairs = ((pairs + PairsPerTask - 1) / PairsPerTask).min(BigInt(Int.MaxValue)).toInt
+    math.min(ceiling, math.max(2 * parallelism, byPairs))
+  }
+
+  /** What the block-count query found: the exact join output P = Σ n_a·n_b
+    * over the blocks both sides share, and the blocks whose B side has more
+    * than the salting cap rows (`None`: no such block), as a local table of
+    * the block columns plus `__ns` (the salt count, ceil(n_b / cap)).
+    */
+  private[graft] final case class BlockCounts(pairs: BigInt, oversized: Option[DataFrame])
+
+  /** The one eager, row-scale block-count query behind salting and fan-out
+    * sizing: per-block row counts of each side (block columns only), joined
+    * on the block key and reduced to P and the oversized blocks in one
+    * driver row. Null keys never join, so they add nothing to P; with no
+    * block columns the two global counts give P = nA·nB. The driver holds
+    * one row per oversized block, at most nB / cap of them.
+    */
+  private[graft] def blockCounts(
+      dfA: DataFrame,
+      dfB: DataFrame,
+      blockCols: Seq[String],
+      maxBlockRows: Option[Long]): BlockCounts = {
+    val keys = blockCols.map(col)
+    val ca = dfA.groupBy(keys: _*).agg(count(lit(1)).as("__an"))
+    val cb = dfB.groupBy(keys: _*).agg(count(lit(1)).as("__bn"))
+    val blocks = if (blockCols.isEmpty) ca.crossJoin(cb) else ca.join(cb, blockCols)
+    val oversized = maxBlockRows.fold(lit(false))(cap => col("__bn") > cap)
+    val ns = maxBlockRows.fold(lit(1))(cap => ceil(col("__bn") / cap.toDouble).cast("int"))
+    val row = blocks.agg(
+      sum(col("__an").cast(DecimalType(38, 0)) * col("__bn")),
+      collect_list(when(oversized, struct(keys :+ ns.as("__ns"): _*)))).head()
+    val pairs = if (row.isNullAt(0)) BigInt(0) else BigInt(row.getDecimal(0).toBigInteger)
+    val over = row.getList[Row](1)
+    val schema = StructType(blockCols.map(c => dfB.schema(c).copy(nullable = true)) :+
+      StructField("__ns", IntegerType))
+    BlockCounts(pairs,
+      if (over.isEmpty) None else Some(dfB.sparkSession.createDataFrame(over, schema)))
+  }
+
   /** Builds the pair DataFrame: equi-join on blocking columns, or a
     * repartitioned cross join when `blockCols` is empty (the reference's
     * all-pairs mode — only sane at test scale; the `Sum counts == N1*N2`
@@ -100,15 +159,24 @@ object Linker {
     * default-conf session a small-input link collapses the whole
     * gamma-compute fan-out onto ONE task (measured round 1: q_gamma_jw
     * 10.7s on 1 task vs 2.6s with a 64-way spread at sf0.1/local[32]).
-    * `fanoutPartitions = Some(n)` repartitions both join INPUTS on the
-    * exact join keys with an explicit partition count: the sides arrive
-    * co-partitioned, EnsureRequirements inserts no further exchange, AQE
-    * never coalesces an explicit-numPartitions repartition — so the join
-    * AND every downstream comparator fused into its stage run n-way on any
-    * session conf, with NO pair-scale shuffle anywhere (the shuffled data
-    * is row-scale). Effective parallelism is bounded by distinct join keys,
-    * which is what `maxBlockRows` salting multiplies. Opt-in because at
-    * true input scale the join input already spans many map tasks.
+    * With `fanoutPartitions = Some(ceiling)` both join INPUTS are
+    * repartitioned on the exact join keys to an explicit partition count
+    * sized from the join's exact output P: [[pairJoinPartitions]], one task
+    * per [[PairsPerTask]] pairs, at least two per core, at most `ceiling`.
+    * The sides arrive co-partitioned, EnsureRequirements inserts no further
+    * exchange, AQE never coalesces an explicit-numPartitions repartition —
+    * so the join AND every downstream comparator fused into its stage run
+    * at that width on any session conf, with NO pair-scale shuffle anywhere
+    * (the shuffled data is row-scale). Effective parallelism is bounded by
+    * distinct join keys, which is what `maxBlockRows` salting multiplies.
+    * Opt-in because at true input scale the join input already spans many
+    * map tasks.
+    *
+    * BLOCK COUNTS: whenever `maxBlockRows` or `fanoutPartitions` is set, one
+    * eager query ([[blockCounts]]) scans the block columns of BOTH sides
+    * before the join is planned — row-scale, one extra scan of each input's
+    * block columns — and yields the oversized blocks the salting needs and
+    * P for the sizing. With no oversized block the join runs unsalted.
     * `tfAdjust` specs get side `tf_<var>_a/_b` columns; `carry` columns of
     * either side ride the join unsuffixed, for a pair filter to read.
     */
@@ -122,7 +190,24 @@ object Linker {
       fanoutPartitions: Option[Int] = None,
       observeA: Option[org.apache.spark.sql.Observation] = None,
       observeB: Option[org.apache.spark.sql.Observation] = None,
-      carry: Seq[String] = Nil): DataFrame = {
+      carry: Seq[String] = Nil): DataFrame =
+    sizedPairs(dfA, dfB, cfg, specs, blockCols, maxBlockRows, fanoutPartitions,
+      observeA, observeB, carry)._1
+
+  /** [[buildPairs]], plus the sizing its block-count query found (`None`
+    * when neither `maxBlockRows` nor `fanoutPartitions` is set).
+    */
+  private[operators] def sizedPairs(
+      dfA: DataFrame,
+      dfB: DataFrame,
+      cfg: MatchConfig,
+      specs: Seq[VariableSpec],
+      blockCols: Seq[String],
+      maxBlockRows: Option[Long],
+      fanoutPartitions: Option[Int],
+      observeA: Option[org.apache.spark.sql.Observation],
+      observeB: Option[org.apache.spark.sql.Observation],
+      carry: Seq[String]): (DataFrame, Option[PairSizing]) = {
     def side(df: DataFrame, id: String, suffix: String): DataFrame = {
       val varCols = specs.map(_.varname).distinct
       val tf = TermFrequency.withTfColumns(df, specs, suffix)
@@ -138,56 +223,53 @@ object Linker {
     // (zero extra jobs; the old form ran eager dfA.count()/dfB.count() input
     // scans before the join). The observe node sits ABOVE the narrow side
     // projection (column pruning already done) and BELOW the salting explode
-    // (each input row counted once, not once per replica); the salting's
-    // oversized-block aggregate reads the un-observed `bRaw` lineage so the
-    // metric isn't accumulated twice in one executed plan.
-    val a0 = side(dfA, cfg.idA, "_a")
-    val a = observeA.fold(a0)(o => a0.observe(o, count(lit(1)).as("n")))
-    val bRaw = side(dfB, cfg.idB, "_b")
-    val b = observeB.fold(bRaw)(o => bRaw.observe(o, count(lit(1)).as("n")))
+    // (each input row counted once, not once per replica). The block-count
+    // query reads the raw inputs, so it never touches the observations.
+    def observed(df: DataFrame, o: Option[org.apache.spark.sql.Observation]) =
+      o.fold(df)(df.observe(_, count(lit(1)).as("n")))
+    val a = observed(side(dfA, cfg.idA, "_a"), observeA)
+    val b = observed(side(dfB, cfg.idB, "_b"), observeB)
+    val salting = maxBlockRows.filter(_ => blockCols.nonEmpty)
+    val counts =
+      if (salting.isEmpty && fanoutPartitions.isEmpty) None
+      else Some(blockCounts(dfA, dfB, blockCols, salting))
+    val partitions = for (c <- counts; ceiling <- fanoutPartitions) yield
+      pairJoinPartitions(c.pairs, dfA.sparkSession.sparkContext.defaultParallelism, ceiling)
+    val sizing = counts.map(c => PairSizing(c.pairs, partitions))
     // co-partition a join input on its keys with an explicit (never
     // AQE-coalesced) partition count — see FAN-OUT PARALLELISM above
-    def fan(df: DataFrame, keys: Seq[String]): DataFrame = fanoutPartitions match {
+    def fan(df: DataFrame, keys: Seq[String]): DataFrame = partitions match {
       case Some(n) => df.repartition(n, keys.map(col): _*)
       case None    => df
     }
-    if (blockCols.isEmpty) {
+    val pairs = if (blockCols.isEmpty) {
       // cross join has no keys to co-partition on; spread the output instead
       val joined = a.crossJoin(b)
-      fanoutPartitions.fold(joined)(n => joined.repartition(n, col("id_a"), col("id_b")))
-    } else maxBlockRows match {
+      partitions.fold(joined)(n => joined.repartition(n, col("id_a"), col("id_b")))
+    } else counts.flatMap(_.oversized) match {
       case None =>
         fan(a, blockCols).join(fan(b, blockCols), blockCols, "inner")
           .drop(blockCols: _*)
-      case Some(cap) =>
+      case Some(over) =>
         // Two-sided salting: rows of an oversized block land in a
         // ns x ns grid of cells of ~cap^2 pairs each (balanced tasks); a row
         // with salt s on its own side is replicated across the other side's
         // ns salts. Every (a,b) pair appears in exactly one cell:
         // (x = salt(a), y = salt(b)).
-        val oversized = bRaw.groupBy(blockCols.map(col): _*)
-          .agg(count(lit(1)).as("__bn"))
-          .filter(col("__bn") > cap)
-          .withColumn("__ns", ceil(col("__bn") / cap.toDouble).cast("int"))
-          .drop("__bn")
-        val aS = a.join(broadcast(oversized), blockCols, "left")
-          .withColumn("__x",
-            when(col("__ns").isNull, lit(0))
-              .otherwise(pmod(xxhash64(col("id_a")), col("__ns").cast("long")).cast("int")))
-          .withColumn("__y",
-            explode(sequence(lit(0), coalesce(col("__ns"), lit(1)) - 1)))
-          .drop("__ns")
-        val bS = b.join(broadcast(oversized), blockCols, "left")
-          .withColumn("__y",
-            when(col("__ns").isNull, lit(0))
-              .otherwise(pmod(xxhash64(col("id_b")), col("__ns").cast("long")).cast("int")))
-          .withColumn("__x",
-            explode(sequence(lit(0), coalesce(col("__ns"), lit(1)) - 1)))
-          .drop("__ns")
+        def salted(df: DataFrame, id: String, own: String, other: String) =
+          df.join(broadcast(over), blockCols, "left")
+            .withColumn(own,
+              when(col("__ns").isNull, lit(0))
+                .otherwise(pmod(xxhash64(col(id)), col("__ns").cast("long")).cast("int")))
+            .withColumn(other,
+              explode(sequence(lit(0), coalesce(col("__ns"), lit(1)) - 1)))
+            .drop("__ns")
         val keys = blockCols ++ Seq("__x", "__y")
-        fan(aS, keys).join(fan(bS, keys), keys, "inner")
+        fan(salted(a, "id_a", "__x", "__y"), keys)
+          .join(fan(salted(b, "id_b", "__y", "__x"), keys), keys, "inner")
           .drop("__x", "__y").drop(blockCols: _*)
     }
+    (pairs, sizing)
   }
 
   /** Varnames whose gamma columns feed a group's EM: its own leaf variables
@@ -197,6 +279,15 @@ object Linker {
     g.variables.map(_.varname) ++ g.children.map(_.name)
 
   private[operators] def linkMetaAt(dir: String) = s"$dir/_graft_link.json"
+
+  /** The gamma stage's link sidecar: the config fingerprint, the pinned
+    * comparison-space dims and, when the write ran a block-count query, the
+    * pair join's [[PairSizing]].
+    */
+  private[operators] def linkMetaJson(
+      fp: String, dims: (BigInt, BigInt), sizing: Option[PairSizing]): String =
+    s"""{"fingerprint":"$fp","dims_a":${dims._1},"dims_b":${dims._2}""" +
+      sizing.fold("")("," + _.json) + "}"
 
   /** Deterministic fingerprint of everything that shapes the narrow gamma
     * checkpoint's content besides the input rows themselves: the full config
@@ -223,6 +314,8 @@ object Linker {
     * [[link]] runs EM over this; the incremental-append path
     * ([[Checkpoints.appendDedupeIncrement]]) computes it for the
     * increment's pair space and appends it to an existing checkpoint.
+    * Also returns the pair join's [[PairSizing]], for the checkpoint's link
+    * sidecar.
     */
   def narrowGammas(
       dfA: DataFrame,
@@ -235,11 +328,12 @@ object Linker {
       autoDistinctRewrite: Boolean = false,
       observeA: Option[org.apache.spark.sql.Observation] = None,
       observeB: Option[org.apache.spark.sql.Observation] = None,
-      carry: Seq[String] = Nil): DataFrame = {
+      carry: Seq[String] = Nil): (DataFrame, Option[PairSizing]) = {
     val allSpecs = cfg.comparisons.allVariables
     // no side TF columns: the narrow table does not keep them
-    var ps = buildPairs(dfA, dfB, cfg, allSpecs.map(_.copy(tfAdjust = false)),
+    val (built, sizing) = sizedPairs(dfA, dfB, cfg, allSpecs.map(_.copy(tfAdjust = false)),
       blockCols, maxBlockRows, fanoutPartitions, observeA, observeB, carry)
+    var ps = built
     pairFilter.foreach(f => ps = ps.filter(f))
     // gamma columns for every leaf variable (one codegen'd projection;
     // the distinct-value rewrite is applied per variable where it pays)
@@ -255,7 +349,7 @@ object Linker {
     // comparisons run exactly once, and the EM/threshold passes re-read a
     // narrow columnar table (bytes per pair) instead of re-running the join
     // + kernels.
-    ps.select(narrowCols(cfg).map(col): _*)
+    (ps.select(narrowCols(cfg).map(col): _*), sizing)
   }
 
   /** The gamma checkpoint's columns: ids + one gamma per leaf variable. */
@@ -350,7 +444,7 @@ object Linker {
     var pairs: DataFrame = resumedPath match {
       case Some(done) => spark.read.parquet(done).select(narrowCols(cfg).map(col): _*)
       case None =>
-        val narrow = narrowGammas(dfA, dfB, cfg, blockCols, maxBlockRows,
+        val (narrow, sizing) = narrowGammas(dfA, dfB, cfg, blockCols, maxBlockRows,
           fanoutPartitions, pairFilter, autoDistinctRewrite,
           Some(obsA), Some(obsB))
         // Materialize the narrow table so comparisons run exactly once.
@@ -367,8 +461,7 @@ object Linker {
               // window must leave the stage incomplete, never complete
               // without its drift guard
               Checkpoints.materializeAt(spark, dir, beforeComplete = () =>
-                Checkpoints.writeFile(linkMetaAt(dir),
-                  s"""{"fingerprint":"$fp","dims_a":${dims._1},"dims_b":${dims._2}}"""))(narrow)
+                Checkpoints.writeFile(linkMetaAt(dir), linkMetaJson(fp, dims, sizing)))(narrow)
             case None =>
               val p = narrow.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
               cachedBase = Some(p)

@@ -36,6 +36,36 @@ class CheckpointsSpec extends SparkSpec {
     assert(Checkpoints.readInfo(root, "s1").get.secs == info.secs)
   }
 
+  test("materializeAt reads a stage it just wrote with the written schema: no inference job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val root = tmpRoot()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    def jobsOf(body: => Unit): Int = {
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      val before = jobs.get()
+      body
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      jobs.get() - before
+    }
+    val df = spark.range(0, 1000, 1, 4).select(col("id"), (col("id") % 7).as("k"))
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val writeJobs = jobsOf(df.write.parquet(s"$root/plain"))
+      var written: org.apache.spark.sql.DataFrame = null
+      val stageJobs = jobsOf { written = Checkpoints.materializeAt(spark, s"$root/s")(df) }
+      // the stage write's own jobs and nothing else: Parquet schema
+      // inference on the read-back would add one
+      assert(stageJobs == writeJobs, s"$stageJobs jobs vs $writeJobs for the bare write")
+      // a resumed stage infers its schema, and both reads agree
+      val resumed = Checkpoints.materializeAt(spark, s"$root/s")(fail("stage recomputed"))
+      assert(written.schema == resumed.schema)
+      assert(written.count() == 1000L && resumed.count() == 1000L)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("resumable link-and-cluster completes and resumes mid-pipeline") {
     val root = tmpRoot()
     val params = WebCorpus.Params(nBase = 400, dupFraction = 0.3, nHosts = 10)

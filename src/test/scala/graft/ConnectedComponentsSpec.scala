@@ -55,6 +55,22 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(local.nonEmpty)
   }
 
+  test("over-cap graph: the probe and the distinct path share one pass of the edge source") {
+    import spark.implicits._
+    val produced = spark.sparkContext.longAccumulator("edgeRows")
+    // 200 edges over 4 partitions: node i + 10 hangs off node i % 10
+    val edges = spark.range(0, 200, 1, 4).map { i =>
+      produced.add(1)
+      (i + 10L, i % 10L)
+    }.toDF("src", "dst")
+    // a cap of 5 edges: the raw probe comes back over the cap and the run
+    // falls through to the distinct path and the distributed loop
+    val comps = ConnectedComponents.run(edges, localMaxEdges = 5L).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(produced.value == 200L, s"edge source produced ${produced.value} rows for 200 edges")
+    assert(comps.size == 210 && comps.forall { case (n, c) => c == n % 10 })
+  }
+
   test("chains and cliques resolve identically through the distributed loop") {
     import spark.implicits._
     val edges = Seq(

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
-import graft.operators.{Blocking, Checkpoints}
+import graft.operators.{Blocking, Checkpoints, Linker}
 import graft.sources.WebCorpus
 
 class PipelineSpec extends SparkSpec {
@@ -107,6 +107,56 @@ class PipelineSpec extends SparkSpec {
         "--config", cfgPath, "--checkpoint", s"$dir/ckpt2",
         "--increment", s"$dir/day2.parquet"))))
     assert(e.getMessage.contains("--increment"))
+  }
+
+  test("pipeline summary: the gamma stage reports its exact pair count and the fan-out it chose") {
+    val dir = Files.createTempDirectory("graft-pipe-size").toString
+    // concat_ws never yields null: every row has a block key
+    val pages = WebCorpus.pages(spark, WebCorpus.Params(nBase = 400, dupFraction = 0.3, nHosts = 10))
+      .withColumn("title", concat_ws(" ", slice(split(col("text"), " "), 1, 3)))
+      .withColumn("n_tokens", size(split(col("text"), " ")))
+      .withColumn("block", concat_ws("|", Blocking.host(col("url")), col("lang")))
+      .select("page_id", "title", "n_tokens", "block")
+    pages.filter(pmod(col("page_id"), lit(4)) =!= 0).write.parquet(s"$dir/day1.parquet")
+    pages.filter(pmod(col("page_id"), lit(4)) === 0).write.parquet(s"$dir/day2.parquet")
+    val base = Seq(
+      "--input-a", s"$dir/day1.parquet",
+      "--config", writeConfig(dir),
+      "--block", "block",
+      "--checkpoint", s"$dir/ckpt",
+      "--max-block-rows", "50",
+      "--fanout", "8",
+      "--gamma-checkpoint", "parquet")
+    def pairJoin(summary: String): (Long, BigInt, Int) =
+      (""""gammas":\{"rows":([0-9]+),[^{}]*"pair_join":\{"pairs_predicted":([0-9]+),""" +
+        """"partitions":([0-9]+)\}""").r.findFirstMatchIn(summary)
+        .map(m => (m.group(1).toLong, BigInt(m.group(2)), m.group(3).toInt))
+        .getOrElse(fail(s"no gamma pair_join entry in $summary"))
+    def partFiles(): Set[String] =
+      new java.io.File(s"$dir/ckpt/gammas").list().filter(_.endsWith(".parquet")).toSet
+    val parallelism = spark.sparkContext.defaultParallelism
+    val day1 = spark.read.parquet(s"$dir/day1.parquet")
+    val day2 = spark.read.parquet(s"$dir/day2.parquet")
+
+    val (rows, predicted, partitions) = pairJoin(Pipeline.run(spark, Pipeline.parseArgs(base)))
+    // the self-join's Σ n_b^2 pairs hold every unordered pair twice plus the
+    // N self pairs; the id_a < id_b filter keeps (P - N) / 2 of them
+    assert(BigInt(rows) == (predicted - day1.count()) / 2)
+    assert(partitions == Linker.pairJoinPartitions(predicted, parallelism, 8))
+    val day1Files = partFiles()
+    assert(day1Files.nonEmpty && day1Files.size <= partitions)
+
+    // the increment reports its own pair join: increment x (corpus ∪
+    // increment), Σ n_I,b (n_C,b + n_I,b), and adds at most that many files
+    val (_, incPredicted, incPartitions) = pairJoin(Pipeline.run(spark,
+      Pipeline.parseArgs(base ++ Seq("--increment", s"$dir/day2.parquet"))))
+    val expected = day2.groupBy("block").count().withColumnRenamed("count", "ni")
+      .join(day1.unionByName(day2).groupBy("block").count(), "block")
+      .agg(sum(col("ni") * col("count"))).head().getLong(0)
+    assert(incPredicted == BigInt(expected))
+    assert(incPartitions == Linker.pairJoinPartitions(incPredicted, parallelism, 8))
+    val added = partFiles() -- day1Files
+    assert(added.nonEmpty && added.size <= incPartitions)
   }
 
   test("plain link mode fails fast when the two inputs share id values") {

@@ -71,6 +71,12 @@ class PlanSpec extends SparkSpec {
     val salted = Linker.buildPairs(side("ida"), side("idb"), cfg, specs, Seq("block"), Some(10L))
     assert(plain.count() == 50L * 50 + 5L * 5)
     assert(salted.count() == plain.count())
+    // the block-count query behind the salting predicts the join output
+    // exactly, and finds the hot block with its salt count ceil(50 / 10)
+    val counts = Linker.blockCounts(side("ida"), side("idb"), Seq("block"), Some(10L))
+    assert(counts.pairs == BigInt(salted.count()))
+    assert(counts.oversized.get.collect().map(r => (r.getString(0), r.getInt(1))).toSeq ==
+      Seq(("hot", 5)))
     // identical pair multiset
     val p1 = plain.select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).sorted
     val p2 = salted.select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).sorted
@@ -248,13 +254,37 @@ class PlanSpec extends SparkSpec {
       spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
       val fanned = Linker.buildPairs(side("ida"), side("idb"), cfg, specs,
         Seq("block"), None, fanoutPartitions = Some(16))
+      // 4 blocks x 50^2 pairs: the count comes from the pair count (here its
+      // floor, two tasks per core) under the ceiling of 16
+      val derived = Linker.pairJoinPartitions(BigInt(4 * 50 * 50),
+        spark.sparkContext.defaultParallelism, 16)
+      assert(derived > 1)
       // explicit-numPartitions repartition is never AQE-coalesced: the
       // comparator fan-out keeps its parallelism on ANY session conf
-      assert(fanned.rdd.getNumPartitions == 16)
+      assert(fanned.rdd.getNumPartitions == derived)
       // and the pair multiset is untouched by the extra exchange
       assert(fanned.count() ==
         Linker.buildPairs(side("ida"), side("idb"), cfg, specs, Seq("block")).count())
     } finally spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", prev)
+  }
+
+  test("pair-join fan-out: two tasks per core floor, one task per PairsPerTask pairs, fanout ceiling") {
+    import Linker.{pairJoinPartitions, PairsPerTask}
+    // floor: a small pair space still gets two tasks per core
+    assert(pairJoinPartitions(BigInt(0), 4, 64) == 8)
+    assert(pairJoinPartitions(BigInt(45000), 4, 64) == 8)
+    // derived from P: ceil(P / PairsPerTask)
+    assert(pairJoinPartitions(BigInt(20) * PairsPerTask, 4, 64) == 20)
+    assert(pairJoinPartitions(BigInt(20) * PairsPerTask + 1, 4, 64) == 21)
+    // ceiling: the caller's fanout caps both the floor and the P-derived count
+    assert(pairJoinPartitions(BigInt(10).pow(12), 4, 64) == 64)
+    assert(pairJoinPartitions(BigInt(0), 16, 8) == 8)
+    // the flagship's 148,871,042 pairs keep their 64-way fan-out
+    // (ceiling max(64, 2 x cores)) at 2, 8 and 16 cores
+    Seq(2, 8, 16).foreach { cores =>
+      assert(pairJoinPartitions(BigInt(148871042L), cores, math.max(64, 2 * cores)) == 64,
+        s"$cores cores")
+    }
   }
 
   test("TF frequency-table join is cardinality-gated: broadcast small, shuffle large") {
